@@ -85,7 +85,7 @@ object Bench {
     // standing grams) and the codegen'd integer-Viterbi unigram encode
     "q_substring_dedup_indexed", "q_unigram_encode",
     // round 13 (VERDICT r12 #7): the materialized-rollup ROUTED read —
-    // rollup built once per JVM (SparkEntry.rollupCache), each run
+    // rollup built once per JVM (RelationalQueries.rollupCache), each run
     // registers, routes (plan-checked), executes, unregisters; a
     // routing-overhead or rollup-read regression now shows in
     // BENCH_r{N}.json instead of being invisible
@@ -200,33 +200,21 @@ object Bench {
     // executor count.
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", math.min(4, shuffle).toString)
-    val (streaming, streamingIngest, streamingHll, streamingSubstring) = try {
-    // streaming headline: the same tumbling-window aggregation the batch
-    // oracle q_events_hourly verifies, driven as a REAL Structured
-    // Streaming query over the file source — the batch/stream parity
-    // claim under measurement. Setup (copying the fixture into a
-    // watchable directory) is untimed; the clock covers plan + all
-    // micro-batches to completion.
-    val streaming = {
-      val name = "s_windowed_counts"
-      // (entry shape mirrors the batch loop: ok samples only)
+    // One streaming entry, `runs` times: `setup(i, dir)` prepares run i
+    // under a fresh temp dir (untimed) and returns the timed body; the
+    // dir is removed after the run, and a failure anywhere records the
+    // run as (-1.0, false) like the batch loop's failed samples.
+    def rmTree(p: java.nio.file.Path): Unit = {
+      val f = p.toFile
+      Option(f.listFiles()).foreach(_.foreach(c => rmTree(c.toPath)))
+      f.delete(); ()
+    }
+    def streamingEntry(name: String, tag: String)(
+        setup: (Int, java.nio.file.Path) => () => Unit): Entry = {
       val samples = (1 to runs).map { i =>
         try {
-          val dir = java.nio.file.Files.createTempDirectory(s"graft-bench-stream$i")
-          java.nio.file.Files.copy(
-            java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-            dir.resolve("events.parquet"))
-          val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-          timed {
-            val q = graft.streaming.StreamOps.windowedCounts(
-                graft.streaming.StreamOps.withEventTime(
-                  spark.readStream.schema(schema).parquet(dir.toString)))
-              .writeStream.format("memory").queryName(s"bench_stream$i")
-              .outputMode("complete").start()
-            q.processAllAvailable(); q.stop()
-            val n = spark.table(s"bench_stream$i").count()
-            require(n > 0, "streaming query produced no windows")
-          }
+          val dir = java.nio.file.Files.createTempDirectory(s"graft-bench-$tag$i")
+          try { val body = setup(i, dir); timed(body()) } finally rmTree(dir)
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           (-1.0, false)
@@ -234,146 +222,100 @@ object Bench {
       }
       Entry(name, samples.collect { case (t, true) => t })
     }
-    // second streaming entry: the composed corpus-ingest pipeline
-    // (quality gate -> watermark-bounded dedup -> per-source totals)
-    // driven as a real file-source stream over the documents fixture
-    val streamingIngest = {
-      val name = "s_ingest_corpus"
-      val samples = (1 to runs).map { i =>
-        try {
-          val dir = java.nio.file.Files.createTempDirectory(s"graft-bench-ingest$i")
-          java.nio.file.Files.copy(
-            java.nio.file.Paths.get(s"$sfDir/documents.parquet"),
-            dir.resolve("documents.parquet"))
-          val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-          timed {
-            val src = spark.readStream.schema(schema).parquet(dir.toString)
-              .withColumn("ingest_ts",
-                org.apache.spark.sql.functions.timestamp_micros(
-                  org.apache.spark.sql.functions.col("doc_id") * 1000000L))
-            val q = graft.streaming.StreamOps.ingestCorpus(src)
-              .writeStream.format("memory").queryName(s"bench_ingest$i")
-              .outputMode("complete").start()
-            q.processAllAvailable(); q.stop()
-            val n = spark.table(s"bench_ingest$i").count()
-            require(n > 0, "ingest stream produced no per-source rows")
-          }
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          (-1.0, false)
+    // a file-source stream over one fixture table copied into the run's
+    // dir, drained into a memory sink that must come back non-empty
+    def memoryStreamEntry(name: String, tag: String, table: String,
+        mode: String)(plan: org.apache.spark.sql.DataFrame =>
+          org.apache.spark.sql.Dataset[_]): Entry =
+      streamingEntry(name, tag) { (i, dir) =>
+        java.nio.file.Files.copy(
+          java.nio.file.Paths.get(s"$sfDir/$table.parquet"),
+          dir.resolve(s"$table.parquet"))
+        val schema = spark.read.parquet(s"$sfDir/$table.parquet").schema
+        () => {
+          val q = plan(spark.readStream.schema(schema).parquet(dir.toString))
+            .writeStream.format("memory").queryName(s"bench_$tag$i")
+            .outputMode(mode).start()
+          q.processAllAvailable(); q.stop()
+          require(spark.table(s"bench_$tag$i").count() > 0,
+            s"$name produced no rows")
         }
       }
-      Entry(name, samples.collect { case (t, true) => t })
-    }
-    // third streaming entry: the stateful HLL distinct sketch — one
-    // 2^p-int register array per event_type in mapGroupsWithState,
-    // measured as a real file-source stream (the batch-parity claim is
-    // pinned in StreamingSpec; this times the stateful path itself)
-    val streamingHll = {
-      val name = "s_hll_users"
-      val samples = (1 to runs).map { i =>
-        try {
-          val dir = java.nio.file.Files.createTempDirectory(s"graft-bench-hll$i")
-          java.nio.file.Files.copy(
-            java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-            dir.resolve("events.parquet"))
-          val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-          timed {
-            val q = graft.streaming.StreamOps.hllDistinct(
-                spark.readStream.schema(schema).parquet(dir.toString),
-                "event_type", "user_id", 6)
-              .writeStream.format("memory").queryName(s"bench_hll$i")
-              .outputMode("update").start()
-            q.processAllAvailable(); q.stop()
-            val n = spark.table(s"bench_hll$i").count()
-            require(n > 0, "hll stream produced no estimates")
-          }
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          (-1.0, false)
-        }
-      }
-      Entry(name, samples.collect { case (t, true) => t })
-    }
-    // fourth streaming entry: the exact-substring ingest LIFECYCLE
-    // (excise against the standing gram index -> staged durable write
-    // -> sink -> novel-gram append), driven as a real foreachBatch
-    // stream in two micro-batches so batch 1's appends excise batch 2
-    // — the cross-batch guarantee is part of what's being timed. A
-    // regression in the staged-write or append path was invisible to
-    // BENCH_r11.json (VERDICT r11 ask #5). Each run gets a FRESH index
-    // (untimed setup): the ingest both appends to and stages under the
-    // index path, so a reused index would turn runs 2-3 into
-    // staged-read replays instead of the lifecycle under measurement.
-    val streamingSubstring = {
-      val name = "s_substring_ingest"
-      // each run builds a fresh gram index + parquet copies + checkpoint
-      // under a temp tree; deleted in the finally below (ADVICE r13 —
-      // three runs per bench invocation otherwise leak the trees)
-      def rmTree(p: java.nio.file.Path): Unit = {
-        val f = p.toFile
-        Option(f.listFiles()).foreach(_.foreach(c => rmTree(c.toPath)))
-        f.delete(); ()
-      }
-      val samples = (1 to runs).map { i =>
-        try {
-          val base = java.nio.file.Files.createTempDirectory(s"graft-bench-sub$i")
+    val streaming = try Seq(
+      // the same tumbling-window aggregation the batch oracle
+      // q_events_hourly verifies, driven as a REAL Structured Streaming
+      // query over the file source — the batch/stream parity claim under
+      // measurement; the clock covers plan + all micro-batches
+      memoryStreamEntry("s_windowed_counts", "stream", "events", "complete")(
+        src => graft.streaming.StreamOps.windowedCounts(
+          graft.streaming.StreamOps.withEventTime(src))),
+      // the composed corpus-ingest pipeline (quality gate ->
+      // watermark-bounded dedup -> per-source totals)
+      memoryStreamEntry("s_ingest_corpus", "ingest", "documents", "complete")(
+        src => graft.streaming.StreamOps.ingestCorpus(src.withColumn(
+          "ingest_ts", org.apache.spark.sql.functions.timestamp_micros(
+            org.apache.spark.sql.functions.col("doc_id") * 1000000L)))),
+      // the stateful HLL distinct sketch — one 2^p-int register array per
+      // event_type in mapGroupsWithState (batch parity is pinned in
+      // StreamingSpec; this times the stateful path itself)
+      memoryStreamEntry("s_hll_users", "hll", "events", "update")(
+        src => graft.streaming.StreamOps.hllDistinct(src,
+          "event_type", "user_id", 6)),
+      // the exact-substring ingest LIFECYCLE (excise against the standing
+      // gram index -> staged durable write -> sink -> novel-gram append),
+      // driven as a real foreachBatch stream in two micro-batches so
+      // batch 1's appends excise batch 2 — the cross-batch guarantee is
+      // part of what's being timed. Each run gets a FRESH index (untimed
+      // setup): the ingest both appends to and stages under the index
+      // path, so a reused index would turn runs 2-3 into staged-read
+      // replays instead of the lifecycle under measurement.
+      streamingEntry("s_substring_ingest", "sub") { (_, base) =>
+        val idxPath = base.resolve("gramidx").toString
+        val watchDir = base.resolve("in")
+        java.nio.file.Files.createDirectory(watchDir)
+        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+          .select("doc_id", "text")
+        import org.apache.spark.sql.functions.{col, pmod, lit}
+        // standing corpus: even ids; stream: odd ids, split by
+        // doc_id % 4 into two single-file parquet batches. Buckets
+        // sized to the corpus (16 for a few-thousand-doc index):
+        // every probe lists and every append writes ≥ 1 file per
+        // touched bucket, so overshading a small index pays pure
+        // file-IO — at 100 TB the same rule sizes buckets UP
+        graft.ops.Dedup.saveGramIndex(
+          docs.where(pmod(col("doc_id"), lit(2)) === 0), idxPath,
+          "text", minLen = 8, buckets = 16)
+        Seq(1L, 3L).zipWithIndex.foreach { case (r, j) =>
+          val stage = base.resolve(s"stage$j")
+          docs.where(pmod(col("doc_id"), lit(4)) === r)
+            .coalesce(1).write.parquet(stage.toString)
+          val listing = java.nio.file.Files.list(stage)
           try {
-          val idxPath = base.resolve("gramidx").toString
-          val watchDir = base.resolve("in")
-          java.nio.file.Files.createDirectory(watchDir)
-          val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-            .select("doc_id", "text")
-          import org.apache.spark.sql.functions.{col, pmod, lit}
-          // standing corpus: even ids; stream: odd ids, split by
-          // doc_id % 4 into two single-file parquet batches. Buckets
-          // sized to the corpus (16 for a few-thousand-doc index):
-          // every probe lists and every append writes ≥ 1 file per
-          // touched bucket, so overshading a small index pays pure
-          // file-IO — at 100 TB the same rule sizes buckets UP
-          graft.ops.Dedup.saveGramIndex(
-            docs.where(pmod(col("doc_id"), lit(2)) === 0), idxPath,
-            "text", minLen = 8, buckets = 16)
-          Seq(1L, 3L).zipWithIndex.foreach { case (r, j) =>
-            val stage = base.resolve(s"stage$j")
-            docs.where(pmod(col("doc_id"), lit(4)) === r)
-              .coalesce(1).write.parquet(stage.toString)
-            val listing = java.nio.file.Files.list(stage)
-            try {
-              val part = listing.filter(_.getFileName.toString
-                  .endsWith(".parquet")).findFirst()
-              require(part.isPresent, s"no parquet part written under $stage")
-              java.nio.file.Files.copy(part.get,
-                watchDir.resolve(s"f$j.parquet"))
-            } finally listing.close()
-          }
-          val schema = docs.schema
-          var delivered = 0L
-          timed {
-            val q = graft.streaming.StreamOps.substringDedupIngest(
-                spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", 1).parquet(watchDir.toString),
-                idxPath, checkpoint = base.resolve("ckpt").toString) {
-              (cleaned, _) => delivered += cleaned.count() }
-              .start()
-            q.processAllAvailable(); q.stop()
-            require(delivered > 0, "substring ingest delivered no rows")
-          }
-          } finally rmTree(base)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          (-1.0, false)
+            val part = listing.filter(_.getFileName.toString
+                .endsWith(".parquet")).findFirst()
+            require(part.isPresent, s"no parquet part written under $stage")
+            java.nio.file.Files.copy(part.get,
+              watchDir.resolve(s"f$j.parquet"))
+          } finally listing.close()
         }
-      }
-      Entry(name, samples.collect { case (t, true) => t })
-    }
-    (streaming, streamingIngest, streamingHll, streamingSubstring)
+        val schema = docs.schema
+        var delivered = 0L
+        () => {
+          val q = graft.streaming.StreamOps.substringDedupIngest(
+              spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1).parquet(watchDir.toString),
+              idxPath, checkpoint = base.resolve("ckpt").toString) {
+            (cleaned, _) => delivered += cleaned.count() }
+            .start()
+          q.processAllAvailable(); q.stop()
+          require(delivered > 0, "substring ingest delivered no rows")
+        }
+      })
     // exception-safe restore (ADVICE r6): without the finally, a crash in
     // the streaming section leaves the shared session pinned at 4 shuffle
     // partitions for everything that runs after the bench
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    val all = results :+ streaming :+ streamingIngest :+ streamingHll :+
-      streamingSubstring
+    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    val all = results ++ streaming
     // a crashed query records -1 (NOT its near-zero elapsed time) and is
     // excluded from the total, so failures can't make the bench look fast
     // ms resolution, ~6 bytes; Locale.ROOT because the f-interpolator's

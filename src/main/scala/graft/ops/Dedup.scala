@@ -1782,8 +1782,10 @@ object Dedup {
     * plan-time predicate behind the scale-adaptive strategy gates. */
   private[graft] def corpusExceeds(corpus: DataFrame,
       confKey: String): Boolean = {
-    val minBytes = corpus.sparkSession.conf
-      .get(confKey, (1L << 30).toString).toLong
+    val raw = corpus.sparkSession.conf.get(confKey, (1L << 30).toString)
+    val minBytes = raw.toLongOption.getOrElse(throw
+      new IllegalArgumentException(
+        s"$confKey must be a byte count (long), got '$raw'"))
     corpus.queryExecution.optimizedPlan.stats.sizeInBytes >= minBytes
   }
 

@@ -1299,10 +1299,9 @@ object TextOps {
     * cluster size. Every real BPE trainer collapses to word counts and
     * trains in memory for this reason; the learned rules are
     * bit-identical to the distributed loop's (pinned by TextOpsSpec),
-    * so the oracle replay is unchanged. Measured
-    * (`tools/BpeTrainProbe`): 32,000 merges over a 1M-word vocabulary
-    * in 74 s, where the loop measures ~3.6 s PER MERGE on the same
-    * corpus (SCALING.md).
+    * so the oracle replay is unchanged. Recorded in SCALING.md (BPE
+    * training, local[32]): 32,000 merges over a 1M-word vocabulary in
+    * 74 s, where the loop measures ~3.6 s PER MERGE on the same corpus.
     *
     * The greedy in-word merge appends each symbol, or fuses it with the
     * accumulated tail when the tail/next pair equals the rule —

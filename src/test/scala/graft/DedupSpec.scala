@@ -1099,4 +1099,20 @@ class DedupSpec extends SparkSpec {
     assert(kept.contains(s"g$cutoff") || cutoff < 1)
     assert(kept.contains("g100") && kept.contains("g101"))
   }
+
+  // both size gates parse their threshold at plan time: a malformed value
+  // must name its key, never surface as a bare NumberFormatException
+  Seq("spark.graft.jaccard.sharedTokExchangeMinBytes",
+      "spark.graft.confirm.explodeMinBytes").foreach { key =>
+    test(s"a malformed $key fails with an error naming the key") {
+      spark.conf.set(key, "1GiB")
+      try {
+        val e = intercept[IllegalArgumentException](
+          Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5).collect())
+        assert(!e.isInstanceOf[NumberFormatException], e)
+        assert(e.getMessage.contains(key) &&
+          e.getMessage.contains("byte count (long)"), e.getMessage)
+      } finally spark.conf.unset(key)
+    }
+  }
 }

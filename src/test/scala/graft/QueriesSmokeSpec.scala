@@ -1,35 +1,34 @@
 package graft
 
+import graft.queries.QuerySpec
+
 /** Every registered query must execute at sf0.001 — the cheap local
   * version of the driver's t1 smoke, so a broken entry never waits for
-  * the driver to find it. Rows-only queries (no DuckDB oracle) also get a
-  * determinism double-run: the driver's hash compare assumes re-running a
-  * query reproduces it bit-for-bit. */
+  * the driver to find it. */
 class QueriesSmokeSpec extends SparkSpec {
-
-  private val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
 
   test("bench headline names are all registered queries") {
     val missing = Bench.headline.toSet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"headline without queries: $missing")
   }
 
-  test("oracle map only references registered queries") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracles without queries: $orphans")
+  test("the registry refuses a repeated name or a blank oracle, naming it") {
+    val q = QuerySpec("q_a", (s, _) => s.range(1).toDF(), "SELECT 0 AS id")
+    val dup = intercept[IllegalArgumentException](
+      QuerySpec.index(Seq(q, q.copy(name = "q_b"), q)))
+    assert(dup.getMessage.contains("q_a") && !dup.getMessage.contains("q_b"),
+      dup.getMessage)
+    val blank = intercept[IllegalArgumentException](
+      QuerySpec.index(Seq(q, q.copy(name = "q_b", oracleSql = null))))
+    assert(blank.getMessage.contains("q_b") &&
+      !blank.getMessage.contains("q_a"), blank.getMessage)
   }
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name executes at sf0.001") {
       val df = fn(spark, sfDir)
-      val rows = df.collect()
+      df.collect()
       assert(df.columns.nonEmpty)
-      if (rowsOnly(name)) {
-        val again = fn(spark, sfDir).collect()
-        assert(rows.map(_.toString).sorted.toSeq ==
-          again.map(_.toString).sorted.toSeq,
-          s"$name is not deterministic across runs")
-      }
     }
   }
 

@@ -1222,6 +1222,44 @@ class StreamingSpec extends SparkSpec {
       s"legacy full-text stage must be delivered verbatim, got $out")
   }
 
+  test("a micro-batch with zero cuts stages an empty cuts table and " +
+      "replays every doc verbatim") {
+    import graft.ops.Dedup
+    val corpus = Seq((1L, "c1 a b c d e f g h c2")).toDF("doc_id", "text")
+    val tmp = java.nio.file.Files
+      .createTempDirectory("graft-stage-zero").toString
+    Dedup.saveGramIndex(corpus, tmp, "text", minLen = 8, buckets = 8)
+    // no corpus hit and no repeat inside the batch: nothing to cut
+    val texts = Map(
+      201L -> "totally novel words nothing shared with the corpus here",
+      202L -> "another fresh line made of its own distinct tokens only")
+    val batch = texts.toSeq.toDF("doc_id", "text")
+    var out = Map.empty[Long, (String, Long)]
+    def sink(df: org.apache.spark.sql.DataFrame, id: Long): Unit =
+      out = df.collect().map(r =>
+        r.getLong(0) -> ((r.getString(1), r.getLong(3)))).toMap
+    val verbatim = texts.map { case (id, x) => id -> ((x, 0L)) }
+    StreamOps.substringDedupIngestBatch(batch, 0L, tmp, "doc_id",
+      "text", minLen = 8, runId = "runZero")(sink)
+    assert(out == verbatim, s"zero-cut batch must pass through: $out")
+    // the staged dir reads back with the same schema a batch WITH cuts
+    // stages, so the replay's `cuts` sniff still recognises it
+    val staged = spark.read.parquet(s"$tmp/ingest_stage/b0")
+    assert(staged.count() == 0L)
+    StreamOps.substringDedupIngestBatch(
+      Seq((301L, "head a b c d e f g h foot")).toDF("doc_id", "text"), 1L,
+      tmp, "doc_id", "text", minLen = 8, runId = "runZero")(sink)
+    assert(out(301L) == (("head foot", 8L)), s"excise wrong: $out")
+    val withCuts = spark.read.parquet(s"$tmp/ingest_stage/b1")
+    assert(staged.schema == withCuts.schema && staged.columns.contains("cuts"),
+      s"${staged.schema} vs ${withCuts.schema}")
+    // replay of the zero-cut batch: every doc verbatim, nothing removed
+    out = Map.empty
+    StreamOps.substringDedupIngestBatch(batch, 0L, tmp, "doc_id",
+      "text", minLen = 8, runId = "runZero")(sink)
+    assert(out == verbatim, s"zero-cut replay diverged: $out")
+  }
+
   test("a grandfathered legacy fence is accepted WITH a warning, and " +
       "the first fold upgrades it to this stream's identity") {
     // VERDICT r13 #2 / #3a: the acceptance is correct (an in-place
